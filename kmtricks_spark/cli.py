@@ -37,6 +37,14 @@ def _cfg_from(args) -> KmConfig:
     )
 
 
+def _bitw(v: str) -> int:
+    # refused before Spark starts: the bfc packer fits 8 // width cells per byte
+    w = int(v)
+    if not 1 <= w <= 8:
+        raise argparse.ArgumentTypeError(f"must be in [1, 8], got {w}")
+    return w
+
+
 def _add_common(p):
     p.add_argument("--run-dir", required=True)
     p.add_argument("--kmer-size", type=int, default=8)
@@ -53,7 +61,8 @@ def _add_common(p):
     p.add_argument("--hist-upper", type=int, default=0,
                    help="histogram upper bound (ref default 255); 0 = unbounded")
     p.add_argument("--bloom-size", type=int, default=10_000_000)
-    p.add_argument("--bitw", type=int, default=2)
+    p.add_argument("--bitw", type=_bitw, default=2,
+                   help="bfc cell width in bits, 1-8")
     p.add_argument("--bloom-mode", choices=["bf", "bft", "bfc"], default="bf",
                    help="--mode hash:{bf,bft,bfc} analogue (cli.cpp:150-199)")
     p.add_argument("--export-filters", choices=["kmbf", "howdesbt"], default=None,

@@ -133,6 +133,7 @@ def bf_slices(hcounts: DataFrame, cfg: KmConfig, min_count: int = 1) -> DataFram
         .agg(F.bitmap_construct_agg(F.col("bitpos")).alias("bm"))
     )
     live = F.col("bucket").isNotNull()
+    zero_bucket = F.lit(bytes(_BITMAP_BUCKET_BITS // 8))
     return (
         per_bucket.groupBy("part_id", "sample_id")
         .agg(
@@ -145,17 +146,12 @@ def bf_slices(hcounts: DataFrame, cfg: KmConfig, min_count: int = 1) -> DataFram
             "part_id",
             "sample_id",
             F.col("n_set").cast("long").alias("n_set"),
-            F.aggregate(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(n_buckets)),
-                    lambda b: F.coalesce(
-                        F.element_at(F.col("__m"), b),
-                        F.lit(bytes(_BITMAP_BUCKET_BITS // 8)),
-                    ),
-                ),
-                F.lit(b"").cast("binary"),
-                lambda acc, x: F.concat(acc, x),
-            ).substr(F.lit(1), F.lit(w // 8)).alias("bitmap"),
+            # one variadic concat over the buckets, known here: a fold
+            # would copy the growing prefix once per bucket
+            F.concat(*[
+                F.coalesce(F.element_at(F.col("__m"), F.lit(b)), zero_bucket)
+                for b in range(1, n_buckets + 1)
+            ]).substr(F.lit(1), F.lit(w // 8)).alias("bitmap"),
         )
     )
 
@@ -169,6 +165,7 @@ def bf_concat(slices: DataFrame, cfg: KmConfig) -> DataFrame:
     # same JVM map-assembly shape as bf_slices (r6): one tiny shuffle of
     # (sample, part, window) rows, ordered concat with zero windows for
     # absent partitions (merge.hpp:575-600) — no Python boundary
+    zero_window = F.lit(bytes(w // 8))
     return (
         slices.groupBy("sample_id")
         .agg(
@@ -180,16 +177,10 @@ def bf_concat(slices: DataFrame, cfg: KmConfig) -> DataFrame:
         .select(
             "sample_id",
             F.col("total_set").cast("long").alias("total_set"),
-            F.aggregate(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(P - 1)),
-                    lambda p: F.coalesce(
-                        F.element_at(F.col("__m"), p), F.lit(bytes(w // 8))
-                    ),
-                ),
-                F.lit(b"").cast("binary"),
-                lambda acc, x: F.concat(acc, x),
-            ).alias("filter"),
+            F.concat(*[
+                F.coalesce(F.element_at(F.col("__m"), F.lit(p)), zero_window)
+                for p in range(P)
+            ]).alias("filter"),
         )
     )
 
@@ -237,7 +228,16 @@ def bfc_slices(hcounts: DataFrame, cfg: KmConfig) -> DataFrame:
 
     def build(key, pdf):
         part, sample = key
-        local = pdf["hash_idx"].to_numpy(dtype=np.int64) - np.int64(part) * w
+        hash_idx = pdf["hash_idx"].to_numpy(dtype=np.int64)
+        local = hash_idx - np.int64(part) * w
+        # numpy would wrap a negative index onto another cell and raise a
+        # bare IndexError past the end: fail with bf_slices' message
+        bad = (local < 0) | (local >= w)
+        if bad.any():
+            raise ValueError(
+                f"bfc_slices: hash_idx outside its partition window: "
+                f"{hash_idx[bad.argmax()]} (part_id {part}, window_bits {w})"
+            )
         cells = np.zeros(w, dtype=np.int64)
         np.add.at(cells, local, pdf["count"].to_numpy(dtype=np.int64))
         packed = bloom.pack_counts(cells, width)

@@ -418,7 +418,12 @@ def curate_run(
     reconstructed from lineage on resume.
     """
     from kmtricks_spark.operators.dedup import release_persisted
-    from kmtricks_spark.plans.lineage import read_lineage, stage_complete, write_lineage
+    from kmtricks_spark.plans.lineage import (
+        observe_stage,
+        read_lineage,
+        stage_complete,
+        write_lineage,
+    )
     from kmtricks_spark.sources.pages import read_stage, write_stage
 
     if until is not None and until not in CURATE_STAGES:
@@ -476,19 +481,20 @@ def curate_run(
         p["stage"] = stage
         return p
 
-    def finish(
-        stage: str, out: DataFrame, extra_report: dict, written: bool = False
-    ) -> DataFrame:
-        if not written:  # the scalar gate writes inside its one-scan pass
-            write_stage(out, run_dir, stage)
-        table = read_stage(spark, run_dir, stage)
+    def write(stage: str, out: DataFrame):
+        # lineage rows and checksum ride the writing job as observed metrics
+        out, obs = observe_stage(out)
+        write_stage(out, run_dir, stage)
+        return obs
+
+    def finish(stage: str, obs, extra_report: dict) -> DataFrame:
         write_lineage(
-            run_dir, stage, params_of(stage), table, part_col=None,
+            run_dir, stage, params_of(stage), obs, part_col=None,
             extra={"report": {k: int(v) for k, v in extra_report.items()}},
         )
         report.update(extra_report)
         status[stage] = "done"
-        return table
+        return read_stage(spark, run_dir, stage)
 
     _after_key = {
         "domain": "after_domain",
@@ -516,16 +522,17 @@ def curate_run(
             gates = _scalar_gates(min_quality, gopher, langs, text_col)
             # the stage parquet write IS the materialization: fuse the
             # funnel-report metrics onto the writing job (one scan)
-            out, rep = _scalar_pass(
+            observed = []
+            _, rep = _scalar_pass(
                 kept, gates,
-                materialize=lambda s: write_stage(s, run_dir, stage),
+                materialize=lambda s: observed.append(write(stage, s)),
             )
-            kept = finish(stage, out, rep, written=True)
+            kept = finish(stage, observed[0], rep)
         elif stage == "domain":
             if "input" not in report:
                 report["input"] = kept.count()
             out = _domain_gate(kept, max_docs_per_domain, url_col, id_col)
-            kept = finish(stage, out, {"input": report["input"]})
+            kept = finish(stage, write(stage, out), {"input": report["input"]})
             report["after_domain"] = read_lineage(run_dir, stage)["output_rows"]
         elif stage == "dedup":
             if "input" not in report:
@@ -533,7 +540,7 @@ def curate_run(
             out = _dedup_gate(
                 kept, dedup, min_jaccard, text_col, id_col, cluster_algorithm
             )
-            kept = finish(stage, out, {"input": report["input"]})
+            kept = finish(stage, write(stage, out), {"input": report["input"]})
             report["after_dedup"] = read_lineage(run_dir, stage)["output_rows"]
         elif stage == "semantic":
             if "input" not in report:
@@ -543,7 +550,7 @@ def curate_run(
                 kept, semantic, vec_col, id_col, cluster_algorithm, survivors,
                 semantic_n_lists,
             )
-            kept = finish(stage, out, {"input": report["input"]})
+            kept = finish(stage, write(stage, out), {"input": report["input"]})
             report["after_semantic"] = read_lineage(run_dir, stage)["output_rows"]
         elif stage == "span":
             if "input" not in report:
@@ -551,7 +558,7 @@ def curate_run(
             out, spans = _span_gate(
                 kept, max_dup_coverage, span, stride, text_col, id_col, span_action
             )
-            kept = finish(stage, out, {"input": report["input"]})
+            kept = finish(stage, write(stage, out), {"input": report["input"]})
             release_persisted(spans)
             report["after_span_dedup"] = read_lineage(run_dir, stage)["output_rows"]
         elif stage == "decontam":
@@ -561,7 +568,7 @@ def curate_run(
                 kept, spark.read.parquet(decontaminate_path), contamination_n,
                 text_col, id_col,
             )
-            kept = finish(stage, out, {"input": report["input"]})
+            kept = finish(stage, write(stage, out), {"input": report["input"]})
             report["after_decontam"] = read_lineage(run_dir, stage)["output_rows"]
         if until == stage:
             break

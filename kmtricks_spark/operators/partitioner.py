@@ -18,6 +18,7 @@ The map is tiny (top-H keys only) and broadcast by construction.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
@@ -90,10 +91,14 @@ def skew_aware_part(
         return static_part(df, key, nb_partitions)
     # route via a BROADCAST join, not a create_map literal: 4096 hot keys
     # as map literals would be an ~8k-expression plan (slow codegen, big
-    # plan broadcast) — the same smell as per-plane literal arrays in LSH
-    spark = df.sparkSession
-    hot_df = spark.createDataFrame(
-        [(k, [int(p) for p in ps]) for k, ps in hot_map.items()],
+    # plan broadcast) — the same smell as per-plane literal arrays in LSH.
+    # Built from an Arrow table, it plans as a LocalTableScan; a Python
+    # list plans as a PythonRDD scan whose tasks start Python workers
+    hot_df = df.sparkSession.createDataFrame(
+        pa.table({
+            "__hot_key": list(hot_map),
+            "__hot_parts": [[int(p) for p in ps] for ps in hot_map.values()],
+        }),
         schema=StructType(
             [
                 StructField("__hot_key", df.schema[key].dataType),

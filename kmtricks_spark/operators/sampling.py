@@ -17,6 +17,7 @@ variant inherently needs.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -88,8 +89,13 @@ def stratified_hash_sample(
             StructField("__th", StringType()),
         ]
     )
+    # an Arrow table plans as a LocalTableScan (no Python-worker scan)
     th = spark.createDataFrame(
-        [(k, frac_to_hex_threshold(v)) for k, v in fractions.items()], schema
+        pa.table({
+            strata_col: list(fractions),
+            "__th": [frac_to_hex_threshold(v) for v in fractions.values()],
+        }),
+        schema,
     )
     j = df.join(F.broadcast(th), strata_col, "left")
     return (

@@ -1,13 +1,17 @@
 """Per-stage lineage metadata: the resume contract.
 
-kmtricks persists every stage to its run directory so any (stage, sample,
-partition) granularity can be re-run idempotently (kmdir.hpp:195-241,
-cmd.hpp:74-272). Our equivalent: each stage writes its table plus a
-lineage JSON (stage, params, input/output rows, per-partition row counts,
-an order-insensitive content checksum, timestamp). A stage is *complete*
-iff its lineage exists, its params match, and its table is readable —
-`Pipeline.run` skips complete stages, which is exactly kill-and-rerun
-resumability.
+kmtricks persists every stage so any (stage, sample, partition) can be
+re-run idempotently (kmdir.hpp:195-241, cmd.hpp:74-272). Each stage here
+writes its table plus a lineage JSON; it is *complete* iff the lineage
+exists, its params match and the table is readable, so a rerun skips it.
+
+Recording a stage starts no Spark job. Where each field comes from:
+- output_rows, checksum: metrics observed on the job that writes the stage
+  (`observe_stage`); checksum sums xxhash64(columns sorted by name) % 2^31
+  over rows, masked to 63 bits, so row order does not matter;
+- partitions: rows per part_id from the written files' parquet footers
+  (`stage_partition_rows`), None for an unpartitioned stage;
+- stage, params, extra keys: the caller; input_rows: None; ts: the clock.
 """
 
 from __future__ import annotations
@@ -17,18 +21,22 @@ import os
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from kmtricks_spark.sources.pages import stage_partition_rows
 
 LINEAGE_DIR = "_lineage"
 
 
-def content_checksum(df: DataFrame) -> int:
-    """Order-insensitive 63-bit content checksum: sum of row hashes."""
-    cols = [F.col(c) for c in sorted(df.columns)]
-    row = df.select(F.xxhash64(*cols).alias("h"))
-    v = row.agg(F.sum(F.col("h") % F.lit(2**31)).alias("s")).collect()[0]["s"]
-    return int(v or 0) & ((1 << 63) - 1)
+def observe_stage(df: DataFrame, partition_by: list[str] | None = None):
+    """(``df`` observing rows and checksum, their Observation). Write it with
+    the same ``partition_by``: partition columns hash as the ints read back."""
+    cols = [F.col(c).cast("int") if c in (partition_by or ()) else F.col(c)
+            for c in sorted(df.columns)]
+    obs = Observation()
+    checksum = F.sum(F.xxhash64(*cols) % F.lit(2**31)).alias("checksum")
+    return df.observe(obs, F.count(F.lit(1)).alias("rows"), checksum), obs
 
 
 def lineage_path(run_dir: str, stage: str) -> str:
@@ -36,28 +44,19 @@ def lineage_path(run_dir: str, stage: str) -> str:
 
 
 def write_lineage(
-    run_dir: str,
-    stage: str,
-    params: dict[str, Any],
-    out_df: DataFrame,
-    input_rows: int | None = None,
-    part_col: str | None = "part_id",
-    extra: dict | None = None,
+    run_dir: str, stage: str, params: dict[str, Any], obs: Observation,
+    part_col: str | None = "part_id", extra: dict | None = None,
 ) -> dict:
-    rows = out_df.count()
-    per_part = None
-    if part_col and part_col in out_df.columns:
-        per_part = {
-            str(r[part_col]): r["n"]
-            for r in out_df.groupBy(part_col).agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+    """Record ``stage`` once `write_stage` has written the frame ``obs`` observes."""
+    m = obs.get
     rec = {
         "stage": stage,
         "params": params,
-        "input_rows": input_rows,
-        "output_rows": rows,
-        "partitions": per_part,
-        "checksum": content_checksum(out_df),
+        "input_rows": None,
+        "output_rows": m["rows"],
+        "partitions": part_col
+        and stage_partition_rows(SparkSession.active(), run_dir, stage, part_col),
+        "checksum": int(m["checksum"] or 0) & ((1 << 63) - 1),
         "ts": time.time(),
         **(extra or {}),
     }

@@ -23,7 +23,7 @@ from kmtricks_spark.config import KmConfig
 from kmtricks_spark.operators.bloom_stage import bf_concat, bf_slices, fpr_report, hash_counts
 from kmtricks_spark.operators.count import count_kgrams, histogram, thresholds_from_histogram
 from kmtricks_spark.operators.merge import count_matrix, merge_stats, pa_matrix
-from kmtricks_spark.plans.lineage import stage_complete, write_lineage
+from kmtricks_spark.plans.lineage import observe_stage, stage_complete, write_lineage
 from kmtricks_spark.sources.pages import read_stage, write_stage
 
 STAGES = ("counts", "histogram", "matrix", "pa", "bloom")
@@ -54,6 +54,10 @@ class Pipeline:
                 "counting cells) — silently skipping the export would be "
                 "worse than refusing"
             )
+        if not 1 <= cfg.bfc_width <= 8:
+            # refuse here, not after counts/matrix/pa are written: the
+            # bfc packer fits 8 // width cells per byte
+            raise ValueError(f"bfc_width must be in [1, 8], got {cfg.bfc_width}")
         if repart_from:
             # realpath at construction: a relative path stored in lineage
             # would resolve against a DIFFERENT cwd at combine time and
@@ -80,6 +84,7 @@ class Pipeline:
         # outputs never depend on the plugin — stays valid
         self.plugin = plugin
         self._plugin_spec = plugin_spec
+        self._sample_list: list[str] | None = None
         self._params = {**asdict(cfg), "input": input_path, "restrict": restrict_to,
                         "repart_from": repart_from,
                         "restrict_samples": restrict_samples,
@@ -96,8 +101,18 @@ class Pipeline:
             p["plugin"] = self._plugin_spec
         return p
 
-    def _finish(self, stage: str, df: DataFrame, **extra):
-        write_lineage(self.run_dir, stage, self._stage_params(stage), df, **extra)
+    def _write(self, stage: str, df: DataFrame, partition_by: str | None = "part_id"):
+        """Persist a lineage-tracked stage: its lineage comes from metrics
+        observed on this write and the written files' footers."""
+        parts = [partition_by] if partition_by else None
+        df, obs = observe_stage(df, parts)
+        write_stage(df, self.run_dir, stage, partition_by=parts)
+        return obs
+
+    def _finish(self, stage: str, obs, partition_by: str | None = "part_id"):
+        write_lineage(
+            self.run_dir, stage, self._stage_params(stage), obs, part_col=partition_by
+        )
 
     def _restrict(self, df: DataFrame) -> DataFrame:
         if self.restrict_to is not None:
@@ -152,8 +167,7 @@ class Pipeline:
     def stage_counts(self):
         if not self._done("counts"):
             counts = count_kgrams(self._input(), self.cfg, hot_map=self._hot_map())
-            write_stage(counts, self.run_dir, "counts", partition_by=["part_id"])
-            self._finish("counts", read_stage(self.spark, self.run_dir, "counts"))
+            self._finish("counts", self._write("counts", counts))
 
     def _hist_bounds(self) -> tuple[int, int | None] | None:
         """(lower, upper) when the histogram is bounded in ANY direction —
@@ -179,10 +193,8 @@ class Pipeline:
                 )
             else:
                 h = histogram(counts)
-            write_stage(h, self.run_dir, "histogram")
-            self._finish(
-                "histogram", read_stage(self.spark, self.run_dir, "histogram"), part_col=None
-            )
+            obs = self._write("histogram", h, partition_by=None)
+            self._finish("histogram", obs, partition_by=None)
 
     def _merge_cfg(self) -> KmConfig:
         cfg = self.cfg
@@ -197,7 +209,13 @@ class Pipeline:
         return cfg
 
     def _samples(self, counts: DataFrame) -> list[str]:
-        return sorted(r.sample_id for r in counts.select("sample_id").distinct().collect())
+        """Sorted sample ids of the (restricted) counts, collected once per
+        `run` and shared by the matrix, pa and bft stages."""
+        if self._sample_list is None:
+            self._sample_list = sorted(
+                r.sample_id for r in counts.select("sample_id").distinct().collect()
+            )
+        return self._sample_list
 
     def stage_matrix(self):
         if not self._done("matrix"):
@@ -211,8 +229,7 @@ class Pipeline:
                 # rows before persist, the reference's call site
                 # (merge.hpp:252-257)
                 m = apply_plugin(m, self.plugin)
-            write_stage(m, self.run_dir, "matrix", partition_by=["part_id"])
-            self._finish("matrix", read_stage(self.spark, self.run_dir, "matrix"))
+            self._finish("matrix", self._write("matrix", m))
             write_stage(merge_stats(counts, cfg), self.run_dir, "merge_stats")
 
     def stage_pa(self):
@@ -220,8 +237,7 @@ class Pipeline:
             counts = self._restrict(read_stage(self.spark, self.run_dir, "counts"))
             cfg = self._merge_cfg()
             p = pa_matrix(counts, self._samples(counts), cfg)
-            write_stage(p, self.run_dir, "pa", partition_by=["part_id"])
-            self._finish("pa", read_stage(self.spark, self.run_dir, "pa"))
+            self._finish("pa", self._write("pa", p))
 
     def stage_bloom(self):
         if not self._done("bloom"):
@@ -235,18 +251,14 @@ class Pipeline:
             elif mode == "bfc":
                 from kmtricks_spark.operators.bloom_stage import bfc_slices
 
-                write_stage(
-                    bfc_slices(hc, self.cfg), self.run_dir, "bloom",
-                    partition_by=["part_id"],
-                )
-                self._finish("bloom", read_stage(self.spark, self.run_dir, "bloom"))
+                self._finish("bloom", self._write("bloom", bfc_slices(hc, self.cfg)))
                 return
             elif mode == "bf":
                 slices = bf_slices(hc, self.cfg)
             else:
                 raise ValueError(f"bloom_mode must be bf|bft|bfc, got {mode!r}")
             # bf and bft share the slice schema: concat + fpr apply to both
-            write_stage(slices, self.run_dir, "bloom", partition_by=["part_id"])
+            obs = self._write("bloom", slices)
             slices_r = read_stage(self.spark, self.run_dir, "bloom")
             write_stage(bf_concat(slices_r, self.cfg), self.run_dir, "bloom_filters")
             write_stage(fpr_report(slices_r, self.cfg), self.run_dir, "fpr")
@@ -259,7 +271,7 @@ class Pipeline:
                     self.cfg,
                     bf_format=self.export_bf,
                 )
-            self._finish("bloom", slices_r)
+            self._finish("bloom", obs)
 
     def run(self) -> dict[str, str]:
         """Execute stages in order, skipping complete ones; stop at
@@ -270,6 +282,7 @@ class Pipeline:
         import time
 
         t0 = time.time()
+        self._sample_list = None  # counts may have changed since a previous run
         status = {}
         for stage in STAGES:
             was_done = self._done(stage)

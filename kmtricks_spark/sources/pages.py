@@ -73,3 +73,26 @@ def write_stage(df: DataFrame, run_dir: str, stage: str, partition_by: list[str]
 
 def read_stage(spark: SparkSession, run_dir: str, stage: str) -> DataFrame:
     return spark.read.parquet(os.path.join(run_dir, stage))
+
+
+def stage_partition_rows(
+    spark: SparkSession, run_dir: str, stage: str, part_col: str = "part_id"
+) -> dict[str, int]:
+    """{part value: rows} of the non-empty partitions, ascending, of a stage
+    table written partitioned by the int column ``part_col``: summed from
+    its parquet footers, which parquet reads in this process through the
+    session's Hadoop FileSystem (any filesystem, no Spark job; hidden files
+    such as _SUCCESS are skipped)."""
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(os.path.join(run_dir, stage))
+    footers = jvm.org.apache.parquet.hadoop.ParquetFileReader.readAllFootersInParallel(
+        conf, root.getFileSystem(conf).getFileStatus(root), False
+    )
+    rows: dict[int, int] = {}
+    for i in range(footers.size()):  # indexed gets: py4j list iteration is far slower
+        footer = footers.get(i)
+        part = int(footer.getFile().getParent().getName()[len(part_col) + 1:])
+        blocks = footer.getParquetMetadata().getBlocks()
+        n = sum(blocks.get(j).getRowCount() for j in range(blocks.size()))
+        rows[part] = rows.get(part, 0) + n
+    return {str(p): n for p, n in sorted(rows.items()) if n}

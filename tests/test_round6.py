@@ -145,14 +145,18 @@ def test_scalar_pass_one_scan_report_matches_two_scan(spark, docs):
 def test_bf_slices_raises_on_out_of_window_index(spark):
     """An index outside its partition's window must fail loudly (the
     numpy build raised IndexError); silent truncation would be a silent
-    Bloom false negative downstream."""
+    Bloom false negative downstream. bfc_slices' numpy build would wrap a
+    negative index onto another cell, so both builds are checked on both
+    sides of the window."""
     from kmtricks_spark.config import KmConfig
-    from kmtricks_spark.operators.bloom_stage import bf_slices
+    from kmtricks_spark.operators.bloom_stage import bf_slices, bfc_slices
 
     cfg = KmConfig(k=8, nb_partitions=2, bloom_bits=131_072)
-    bad = spark.createDataFrame(
-        [(0, "s1", int(cfg.window_bits), 1)],  # local index == window_bits
-        ["part_id", "sample_id", "hash_idx", "count"],
-    )
-    with pytest.raises(Exception, match="outside its partition window"):
-        bf_slices(bad, cfg).collect()
+    for build in (bf_slices, bfc_slices):
+        for local in (int(cfg.window_bits), -1):  # just past / just before
+            bad = spark.createDataFrame(
+                [(0, "s1", local, 1)],
+                ["part_id", "sample_id", "hash_idx", "count"],
+            )
+            with pytest.raises(Exception, match="outside its partition window"):
+                build(bad, cfg).collect()
